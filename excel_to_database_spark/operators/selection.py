@@ -855,13 +855,13 @@ def exact_group_quantiles(
     the round-16 reuse, 1.0× after; the descent keeps the 1.0× — its
     levels all read the pinned blocks). The pin's lifetime follows the
     registry's normal session-level eviction."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
     from pyspark.sql.types import (
         ByteType,
         IntegerType,
         LongType,
         ShortType,
+        StructField,
+        StructType,
     )
 
     qs = list(quantiles)

@@ -81,9 +81,26 @@ def read_csv_text(
     rows = [r for r in rows if any(c.strip() for c in r)]
     if not rows:
         raise ValueError("no data rows in CSV payload")
-    header, data = rows[0], rows[1:]
-    ncols = len(header)
-    # rectangularize, mirroring the xlsx parser's trim/pad (xlsparser.js:189-214)
-    data = [(r + [""] * ncols)[:ncols] for r in data]
+    return string_frame(spark, rows[0], rows[1:], sanitize)
+
+
+def string_frame(
+    spark: SparkSession, header: list, rows: list, sanitize: bool = True
+) -> DataFrame:
+    """Header + body rows → all-string DataFrame (every field nullable
+    ``StringType``; ``None`` cells become ``""``). Rows are
+    rectangularized to the header width, mirroring the xlsx parser's
+    trim/pad (xlsparser.js:189-214).
+
+    The body is handed over as a ``pyarrow.Table`` of string columns:
+    the JVM reads the Arrow batches directly, so writing the frame
+    launches no Python worker (a list of rows would be pickled, then
+    re-pickled by an identity ``map`` inside the write job)."""
+    import pyarrow as pa
+
     cols = sanitize_columns(header) if sanitize else [str(h) for h in header]
-    return spark.createDataFrame(data, schema=", ".join(f"`{c}` string" for c in cols))
+    n = len(cols)
+    grid = [["" if c is None else str(c) for c in r[:n]] + [""] * (n - len(r)) for r in rows]
+    columns = list(zip(*grid)) if grid else [()] * n
+    table = pa.Table.from_arrays([pa.array(c, pa.string()) for c in columns], names=cols)
+    return spark.createDataFrame(table)

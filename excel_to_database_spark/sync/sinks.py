@@ -25,13 +25,21 @@ Sink mapping (reference → Spark):
 At scale the load path is executor-parallel end-to-end: Spark writes N
 partitions concurrently (JDBC: N connections; cloud: N staged objects →
 one COPY), the driver only issues DDL.
+
+A sync launches only the write's jobs (one, unless ``partition_by``
+adds a sort): the existing column set is read from the analyzed table
+or a zero-row probe (no job), and the ``LoadReport`` record count is
+taken from an ``Observation`` attached to the written frame — counted
+during the write, so the source is evaluated once and the written
+table is never read back.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 from excel_to_database_spark.report import LoadReport
 from excel_to_database_spark.sync.policy import SyncAction, decide_sync_action
@@ -41,6 +49,15 @@ SCHEMA_PREFIX = "x_excel"  # reference: app/data.py:103
 
 def tenant_schema(path: str | None) -> str:
     return f"{SCHEMA_PREFIX}_{path}" if path else SCHEMA_PREFIX
+
+
+def _with_row_count(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row-count ``Observation`` attached. Once the write
+    of the returned frame has run, ``obs.get["n"]`` is the number of
+    rows it wrote — counted during the write, so the source is
+    evaluated once and nothing is read back."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
 
 class Destination:
@@ -71,10 +88,11 @@ class LocalDestination(Destination):
         schema = tenant_schema(path)
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {schema}")
         fqtn = f"{schema}.{table_name}"
-        existing = None
-        if spark.catalog.tableExists(fqtn):
-            existing = [f.name for f in spark.catalog.listColumns(fqtn)]
+        # the analyzed table's columns, not catalog.listColumns: that
+        # one collects through toLocalIterator, one job per partition
+        existing = spark.table(fqtn).columns if spark.catalog.tableExists(fqtn) else None
         action = decide_sync_action(existing, df.columns, strict=self.strict)
+        df, obs = _with_row_count(df)
         if action is SyncAction.TRUNCATE:
             # same column set: INSERT OVERWRITE keeps the table identity.
             # insertInto is positional, so align to the table's column
@@ -92,8 +110,7 @@ class LocalDestination(Destination):
             if self.partition_by:
                 writer = writer.partitionBy(*self.partition_by)
             writer.saveAsTable(fqtn)
-        n = spark.table(fqtn).count()
-        return LoadReport(action.value, schema, table_name, n)
+        return LoadReport(action.value, schema, table_name, obs.get["n"])
 
 
 @dataclass
@@ -141,6 +158,7 @@ class JdbcDestination(Destination):
         self._ensure_schema(spark, schema)
         existing = self._existing_columns(spark, fqtn)
         action = decide_sync_action(existing, df.columns, strict=self.strict)
+        df, obs = _with_row_count(df)
         writer = (
             df.write.format("jdbc")
             .option("url", self.url)
@@ -152,7 +170,7 @@ class JdbcDestination(Destination):
             writer.option("truncate", True).mode("overwrite").save()
         else:
             writer.mode("overwrite").save()
-        return LoadReport(action.value, schema, table_name, df.count())
+        return LoadReport(action.value, schema, table_name, obs.get["n"])
 
 
 @dataclass
@@ -265,6 +283,7 @@ class CloudCopyDestination(Destination):
         spark = df.sparkSession
         schema = tenant_schema(path)
         fqtn = f"{schema}.{table_name}"
+        df, obs = _with_row_count(df)
         staged = self.stage(df, table_name)
         copy_sql = self.copy_statement(fqtn, self._staged_entry(staged))
         if not self.jdbc_url:
@@ -296,7 +315,7 @@ class CloudCopyDestination(Destination):
         else:
             self._execute(spark, f"CREATE TABLE {fqtn} ({cols})")
         self._execute(spark, copy_sql)
-        return LoadReport(action.value, schema, table_name, df.count())
+        return LoadReport(action.value, schema, table_name, obs.get["n"])
 
 
 def sync_table(

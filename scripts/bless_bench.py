@@ -15,11 +15,10 @@ pick cannot happen silently): the supported mode is
 which blesses EVERY bench_runs/bench_*.json recording of the target
 code tree (default: the current HEAD's measured-code hash, the same
 one bench.py stamps) whose ``sandbox_cal`` stamp lies inside the
-pre-committed clean band CAL_BAND — the 0.33-0.50 range every prior
-round's accepted recordings sat in, with degraded-day stamps
-(0.6-0.95) outside it. At least MIN_RUNS must qualify. The artifact
-records the full candidate set and each exclusion reason, so the
-selection is an audit trail, not an outcome choice.
+pre-committed clean band ``CAL_BAND``. At least MIN_RUNS must
+qualify. The artifact records the full candidate set and each
+exclusion reason, so the selection is an audit trail, not an outcome
+choice.
 
 Hand-picking paths still works but now REQUIRES --force "<note>":
 the note ships in the artifact under "forced" as provenance.
@@ -45,11 +44,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 #: cross-run max/min spread above which a blessed row is flagged
 BAND = 1.5
 
-#: pre-committed sandbox_cal acceptance band for --auto selection:
-#: every clean-window recording rounds 14-16 accepted stamped
-#: 0.33-0.52; the degraded-day stamps that inflated totals read
-#: 0.6-0.95. A recording outside the band is excluded NO MATTER how
-#: good its total looks — that is the point.
+#: pre-committed sandbox_cal acceptance band for --auto selection: it
+#: holds every clean-window recording rounds 14-16 accepted, and none
+#: of the degraded-day stamps that inflated totals. A recording
+#: outside the band is excluded NO MATTER how good its total looks —
+#: that is the point.
 CAL_BAND = (0.30, 0.52)
 
 #: --auto refuses to bless fewer than this many qualifying recordings

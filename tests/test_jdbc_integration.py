@@ -27,10 +27,11 @@ def _read(spark, dest, fqtn):
     )
 
 
-def test_jdbc_lifecycle(spark, dest):
+def test_jdbc_lifecycle(spark, dest, count_jobs):
     df1 = matrix_to_df(spark, [["a", "b"], ["1", "x"], ["2", "y"]])
-    r1 = dest.sync(df1, "t_jdbc", path="derbytest")
-    assert (r1.action, r1.n_records) == ("Created", 2)
+    r1, jobs = count_jobs(lambda: dest.sync(df1, "t_jdbc", path="derbytest"))
+    # the count is observed during the write: the source is evaluated once
+    assert (r1.action, r1.n_records, jobs) == ("Created", 2, 1)
     fqtn = "x_excel_derbytest.t_jdbc"
     assert sorted(map(tuple, _read(spark, dest, fqtn).collect())) == [
         ("1", "x"),
@@ -39,19 +40,19 @@ def test_jdbc_lifecycle(spark, dest):
 
     # same column set, reordered → TRUNCATE; values land by name
     df2 = matrix_to_df(spark, [["b", "a"], ["z", "9"]])
-    r2 = dest.sync(df2, "t_jdbc", path="derbytest")
-    assert (r2.action, r2.n_records) == ("Truncated", 1)
+    r2, jobs = count_jobs(lambda: dest.sync(df2, "t_jdbc", path="derbytest"))
+    assert (r2.action, r2.n_records, jobs) == ("Truncated", 1, 1)
     back = _read(spark, dest, fqtn).collect()[0]
     assert (back["a"], back["b"]) == ("9", "z")
 
     # changed column set → RECREATE with new schema
-    df3 = matrix_to_df(spark, [["a", "c"], ["5", "6"]])
-    r3 = dest.sync(df3, "t_jdbc", path="derbytest")
-    assert (r3.action, r3.n_records) == ("Recreated", 1)
+    df3 = matrix_to_df(spark, [["a", "c"], ["5", "6"], ["7", "8"], ["9", "10"]])
+    r3, jobs = count_jobs(lambda: dest.sync(df3, "t_jdbc", path="derbytest"))
+    assert (r3.action, r3.n_records, jobs) == ("Recreated", 3, 1)
     assert sorted(c.lower() for c in _read(spark, dest, fqtn).columns) == ["a", "c"]
 
 
-def test_cloud_copy_executes_against_derby(spark, tmp_path):
+def test_cloud_copy_executes_against_derby(spark, tmp_path, count_jobs):
     """The CloudCopyDestination lifecycle — stage CSV, CREATE SCHEMA,
     reconcile DDL, execute the templated COPY over JDBC — end-to-end
     against embedded Derby (SYSCS_IMPORT_TABLE standing in for the
@@ -75,8 +76,9 @@ def test_cloud_copy_executes_against_derby(spark, tmp_path):
     )
 
     df1 = matrix_to_df(spark, [["a", "b"], ["1", "x"], ["2", "y"]])
-    r1 = dest.sync(df1, "t_copy", path="cloudtest")
-    assert (r1.action, r1.n_records) == ("Created", 2)
+    r1, jobs = count_jobs(lambda: dest.sync(df1, "t_copy", path="cloudtest"))
+    # counted during the stage write: the source is evaluated once
+    assert (r1.action, r1.n_records, jobs) == ("Created", 2, 1)
     fqtn = "x_excel_cloudtest.t_copy"
     got = (
         spark.read.format("jdbc")
@@ -93,9 +95,9 @@ def test_cloud_copy_executes_against_derby(spark, tmp_path):
     assert (r2.action, r2.n_records) == ("Truncated", 1)
 
     # changed column set → DROP + CREATE then COPY
-    df3 = matrix_to_df(spark, [["a", "c"], ["5", "6"]])
-    r3 = dest.sync(df3, "t_copy", path="cloudtest")
-    assert (r3.action, r3.n_records) == ("Recreated", 1)
+    df3 = matrix_to_df(spark, [["a", "c"], ["5", "6"], ["7", "8"]])
+    r3, jobs = count_jobs(lambda: dest.sync(df3, "t_copy", path="cloudtest"))
+    assert (r3.action, r3.n_records, jobs) == ("Recreated", 2, 1)
 
 
 def test_jdbc_source_partitioned_read_with_pushdown(spark, tmp_path):

@@ -1,5 +1,8 @@
 import os
 
+import pytest
+from pyspark.sql.types import StringType, StructField, StructType
+
 from excel_to_database_spark.sources.csv_source import read_csv_path, read_csv_text
 from excel_to_database_spark.sources.payload import (
     load_legacy_submit,
@@ -39,6 +42,38 @@ def test_matrix_to_df(spark):
     df = matrix_to_df(spark, [["Col A", "Col A", "n"], ["1", "2", "3"], ["4", "5"]])
     assert df.columns == ["ColA", "ColA_2", "n"]
     assert df.count() == 2
+
+
+def _csv_text(matrix):
+    return "\n".join(",".join("" if c is None else c for c in row) for row in matrix)
+
+
+# both payload parsers build their frame through one helper; the same
+# sheet must come out identical from either
+FRAME_BUILDERS = {
+    "matrix_to_df": matrix_to_df,
+    "read_csv_text": lambda spark, matrix: read_csv_text(spark, _csv_text(matrix), delimiter=","),
+}
+
+
+@pytest.mark.parametrize("build", FRAME_BUILDERS.values(), ids=FRAME_BUILDERS.keys())
+def test_payload_frames_share_one_schema(spark, build):
+    df = build(spark, [["café", "名前", "n"], ["1", None, "x"], ["2", "b"], [None, "c", "y"]])
+    assert df.schema == StructType(
+        [StructField(c, StringType(), True) for c in ("café", "名前", "n")]
+    )
+    # None cells become "", short rows are padded to the header width
+    assert sorted(map(tuple, df.collect())) == [("", "c", "y"), ("1", "", "x"), ("2", "b", "")]
+    # no Python worker: the rows reach the JVM as Arrow batches
+    assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
+
+
+@pytest.mark.parametrize("build", FRAME_BUILDERS.values(), ids=FRAME_BUILDERS.keys())
+def test_payload_frames_header_only_sheet(spark, build):
+    df = build(spark, [["Col A", "b"]])
+    assert df.columns == ["ColA", "b"]
+    assert all(f.dataType == StringType() and f.nullable for f in df.schema.fields)
+    assert df.count() == 0 and df.collect() == []
 
 
 def test_payload_dispatch_xlsx_and_csv(spark):

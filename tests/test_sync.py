@@ -101,3 +101,51 @@ def test_local_destination_csv_format(spark):
     assert r2.action == "Truncated"
     row = spark.table("x_excel_csvtest.t_csvfmt").collect()[0]
     assert (row["a"], row["b"]) == ("9", "z")
+
+
+def test_local_sync_runs_one_job_per_action(spark, count_jobs):
+    """One LocalDestination.sync is one Spark job for every action: the
+    existing columns come from the analyzed table (no listColumns
+    collect) and the row count is observed during the write (no
+    re-read of the table)."""
+    dest = LocalDestination()
+    rows = [[str(i), f"v{i}"] for i in range(500)]
+
+    def sync(matrix):
+        return count_jobs(lambda: dest.sync(matrix_to_df(spark, matrix), "t_onejob", path="jobs"))
+
+    created, jobs = sync([["a", "b"], *rows])
+    assert (created.action, created.n_records, jobs) == ("Created", 500, 1)
+    truncated, jobs = sync([["a", "b"], *rows[:7]])
+    assert (truncated.action, truncated.n_records, jobs) == ("Truncated", 7, 1)
+    reordered, jobs = sync([["b", "a"], ["x", "1"], ["y", "2"]])
+    assert (reordered.action, reordered.n_records, jobs) == ("Truncated", 2, 1)
+    recreated, jobs = sync([["a", "c"], *rows[:3]])
+    assert (recreated.action, recreated.n_records, jobs) == ("Recreated", 3, 1)
+    assert spark.table("x_excel_jobs.t_onejob").count() == 3
+
+
+def test_local_sync_counts_header_only_sheet(spark):
+    dest = LocalDestination()
+    r1 = dest.sync(matrix_to_df(spark, [["a", "b"]]), "t_header_only", path="counts")
+    assert (r1.action, r1.n_records) == ("Created", 0)
+    assert "0 records" in r1.message()
+    r2 = dest.sync(matrix_to_df(spark, [["a", "b"]]), "t_header_only", path="counts")
+    assert (r2.action, r2.n_records) == ("Truncated", 0)
+    assert spark.table("x_excel_counts.t_header_only").count() == 0
+
+
+@pytest.mark.parametrize(
+    "dest",
+    [LocalDestination(partition_by=("region",)), LocalDestination(fmt="csv")],
+    ids=["partition_by", "csv"],
+)
+def test_local_sync_counts_partitioned_and_csv(spark, dest):
+    name = f"t_counts_{dest.fmt}_{len(dest.partition_by)}"
+    body = [[str(i), ["north", "south", "east"][i % 3]] for i in range(40)]
+    r1 = dest.sync(matrix_to_df(spark, [["id", "region"], *body]), name, path="counts")
+    assert (r1.action, r1.n_records) == ("Created", 40)
+    r2 = dest.sync(matrix_to_df(spark, [["region", "id"], ["west", "99"]]), name, path="counts")
+    assert (r2.action, r2.n_records) == ("Truncated", 1)
+    got = spark.table(f"x_excel_counts.{name}").collect()
+    assert [(r["id"], r["region"]) for r in got] == [("99", "west")]
